@@ -4,15 +4,13 @@ credentials/API URL, not a query operator").
 
 Resolution chain mirrors config.py:37-146 (Vault → env → default),
 minus Vault itself (external service): explicit dict → environment →
-default. The result lands in spark.conf / Hadoop conf, which is where
-a Spark engine consumes credentials.
+default. Callers push the result into spark.conf / Hadoop conf, which
+is where a Spark engine consumes credentials.
 """
 
 from __future__ import annotations
 
 import os
-
-from pyspark.sql import SparkSession
 
 DEFAULTS = {
     "api_url": "https://wrm.example/api/stations",  # stand-in; reference default is the WRM endpoint
@@ -42,16 +40,3 @@ def resolve(overrides: dict | None = None, env: dict | None = None) -> dict:
         else:
             out[key] = default
     return out
-
-
-def apply_s3a(spark: SparkSession, conf: dict) -> None:
-    """Push resolved credentials into the Hadoop conf the S3A connector
-    reads (per-session; no global mutation)."""
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    if conf.get("s3_endpoint"):
-        hconf.set("fs.s3a.endpoint", conf["s3_endpoint"])
-        hconf.set("fs.s3a.path.style.access", "true")
-    if conf.get("s3_access_key"):
-        hconf.set("fs.s3a.access.key", conf["s3_access_key"])
-    if conf.get("s3_secret_key"):
-        hconf.set("fs.s3a.secret.key", conf["s3_secret_key"])

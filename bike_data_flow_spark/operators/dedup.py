@@ -35,14 +35,20 @@ them.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .text import normalized_text, tokens
 
-# MinHash configuration — mirrored by the SQL oracle generator.
+# MinHash configuration. The family is built here once per form (the
+# aggregate signature and the per-row stream form); its single SQL
+# mirror is queries/textops._minhash_ctes, hand-written so the oracle
+# stays an independent reference.
 MINHASH_K = 16  # hash functions
 MINHASH_BANDS = 4  # bands of 4 rows each
+MINHASH_SHINGLE_N = 3  # word n-gram width of the hashed shingles
 SIMHASH_BITS = 48  # 12 hex chars of md5 → fits exactly in a BIGINT
 SIMHASH_MAX_HAMMING = 3  # near-dup radius; blocks = max_hamming + 1
 
@@ -251,12 +257,51 @@ def ngram_jaccard_pairs(
 # ---------------------------------------------------------------------------
 
 
+def _base_hash(shingle: Column) -> Column:
+    """The family's ONE md5 per shingle, reduced mod p."""
+    return md5_hash64(shingle) % MINHASH_PRIME
+
+
+def _lane(i: int, h: Column) -> Column:
+    """Affine lane i of the family: (aᵢ·h + bᵢ) mod p over a base hash.
+    The aggregate form MINs it per document; the per-row form
+    array_mins it over the document's own hash array."""
+    a, b = minhash_coeff(i)
+    return (F.lit(a) * h + F.lit(b)) % MINHASH_PRIME
+
+
+def _signature_aggs(hb: Column) -> list[Column]:
+    """The k per-document lane mins m0..m{k-1} (aggregate form)."""
+    return [F.min(_lane(i, hb)).alias(f"m{i}") for i in range(MINHASH_K)]
+
+
+def _band_structs(ms: list[Column], bands: int) -> Column:
+    """array<struct<band, band_key>>: each band's key is the base-31
+    Horner combine of its rows (longs < 2^31 → key < 2^46 at 4 rows, no
+    overflow, no digest cost; both engines compute the same BIGINT)."""
+    rows = len(ms) // bands
+    structs = []
+    for b in range(bands):
+        key = ms[b * rows]
+        for m in ms[b * rows + 1 : (b + 1) * rows]:
+            key = key * F.lit(31) + m
+        structs.append(F.struct(F.lit(b).alias("band"), key.alias("band_key")))
+    return F.array(*structs)
+
+
+def _explode_bands(df: DataFrame, id_col: str, arr: Column) -> DataFrame:
+    """(id, band, band_key) rows from a per-row band-struct array —
+    single projection + explode, NOT a self-union, which would
+    re-execute the whole signature pipeline once per band."""
+    return df.select(F.col(id_col), F.explode(arr).alias("bk")).select(
+        id_col, F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key")
+    )
+
+
 def minhash_signatures(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n: int = 3,
-    k: int = MINHASH_K,
 ) -> DataFrame:
     """Per-doc MinHash signature: columns m0..m{k-1} = min_s h_i(s).
 
@@ -265,57 +310,70 @@ def minhash_signatures(
     independent digests, and min() runs over longs instead of strings.
     """
     # distinct=False: MIN ignores duplicates; saves a full shuffle
-    sh = doc_shingles(df, id_col, text_col, n, distinct=False)
+    sh = doc_shingles(df, id_col, text_col, MINHASH_SHINGLE_N, distinct=False)
     # base hash materializes once as a bound attribute; the k affine
     # mins reference it without re-evaluating the md5
-    staged = sh.select(
-        F.col(id_col),
-        (md5_hash64(F.col("shingle")) % MINHASH_PRIME).alias("_hb"),
-    )
-    aggs = []
-    for i in range(k):
-        a, b = minhash_coeff(i)
-        aggs.append(
-            F.min((F.lit(a) * F.col("_hb") + F.lit(b)) % MINHASH_PRIME).alias(f"m{i}")
-        )
-    return staged.groupBy(id_col).agg(*aggs)
+    staged = sh.select(F.col(id_col), _base_hash(F.col("shingle")).alias("_hb"))
+    return staged.groupBy(id_col).agg(*_signature_aggs(F.col("_hb")))
 
 
 def minhash_band_keys(
     sigs: DataFrame,
     id_col: str = "doc_id",
-    k: int = MINHASH_K,
     bands: int = MINHASH_BANDS,
 ) -> DataFrame:
-    """(id, band_idx, band_key): band_key = polynomial combine of that
-    band's rows (base-31 Horner over longs < 2^31 → key < 2^46, no
-    overflow, no digest cost; both engines compute the same BIGINT).
+    """(id, band_idx, band_key) from a signature frame's m0..m{k-1}."""
+    ms = [F.col(f"m{i}") for i in range(MINHASH_K)]
+    return _explode_bands(sigs, id_col, _band_structs(ms, bands))
 
-    Single projection + explode — NOT a self-union, which would
-    re-execute the whole signature pipeline once per band.
-    """
-    rows = k // bands
-    structs = []
-    for b in range(bands):
-        key: Column | None = None
-        for r in range(rows):
-            m = F.col(f"m{b * rows + r}")
-            key = m if key is None else key * F.lit(31) + m
-        structs.append(
-            F.struct(F.lit(b).alias("band"), key.alias("band_key"))
-        )
-    return sigs.select(
-        F.col(id_col), F.explode(F.array(*structs)).alias("bk")
-    ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"))
+
+def minhash_band_rows(docs: DataFrame) -> DataFrame:
+    """The per-row form of minhash_band_keys(minhash_signatures(docs)):
+    (doc_id, band, band_key) from each row's OWN shingle hashes, no
+    aggregation — so it runs stateless over a stream. Docs too short to
+    shingle yield no rows, as in the aggregate form.
+
+    Every intermediate binds as a lambda variable (tokens once, shingle
+    hashes once) so projection collapse can't duplicate the tokenizer
+    or the md5 pass into the k affine mins."""
+
+    def band_arr(hb: Column) -> Column:
+        ms = [
+            F.array_min(F.transform(hb, partial(_lane, i)))
+            for i in range(MINHASH_K)
+        ]
+        return _band_structs(ms, MINHASH_BANDS)
+
+    hbs = lambda t: F.transform(  # noqa: E731
+        shingles_from_tokens(t, MINHASH_SHINGLE_N), _base_hash
+    )
+    arr = F.element_at(
+        F.transform(
+            F.array(tokens(F.col("text"))),
+            lambda t: F.element_at(F.transform(F.array(hbs(t)), band_arr), 1),
+        ),
+        1,
+    )
+    return _explode_bands(docs, "doc_id", arr).filter(F.col("band_key").isNotNull())
+
+
+def band_self_join(keys: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """(id_a, id_b), id_a < id_b, once per band bucket the two share —
+    the LSH candidate equi-join. Not distinct: callers dedupe where
+    their plan wants it."""
+    a = keys.select(F.col(id_col).alias("id_a"), "band", "band_key")
+    b = keys.select(F.col(id_col).alias("id_b"), "band", "band_key")
+    return (
+        a.join(b, ["band", "band_key"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+    )
 
 
 def minhash_lsh_candidates(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n: int = 3,
-    k: int = MINHASH_K,
-    bands: int = MINHASH_BANDS,
 ) -> DataFrame:
     """Distinct candidate near-dup pairs (id_a < id_b) sharing ≥1 LSH band.
 
@@ -324,17 +382,8 @@ def minhash_lsh_candidates(
     (the most expensive subtree in the dedup family) — at 100 TB that
     is the difference between one corpus scan and two.
     """
-    keys = minhash_band_keys(
-        minhash_signatures(df, id_col, text_col, n, k), id_col, k, bands
-    ).cache()
-    a = keys.select(F.col(id_col).alias("id_a"), "band", "band_key")
-    b = keys.select(F.col(id_col).alias("id_b"), "band", "band_key")
-    return (
-        a.join(b, ["band", "band_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    keys = minhash_band_keys(minhash_signatures(df, id_col, text_col), id_col).cache()
+    return band_self_join(keys, id_col).distinct()
 
 
 # ---------------------------------------------------------------------------
@@ -536,9 +585,6 @@ def capped_block_join(
     names: DataFrame,
     cap: int = 2000,
     max_len_diff: int = 4,
-    n: int = 3,
-    k: int = MINHASH_K,
-    bands: int = 8,
 ) -> DataFrame:
     """Entity-resolution candidate pairs within blocking keys, with a
     per-block size cap so candidate pairs never grow Θ(n²) when the
@@ -561,7 +607,7 @@ def capped_block_join(
       short name flips ~n of its ~|name| char-grams, vs most of its
       handful of word-grams), band-keyed WITHIN the block: candidate
       pairs bounded by LSH bucket collisions instead of block size².
-      Approximate; with the default 8 bands × 2 rows, a pair at
+      Approximate; with 8 bands × 2 rows, a pair at
       char-Jaccard j surfaces with prob 1−(1−j²)⁸ — ≥ 0.97 for
       j ≥ 0.6, the radius-≤-max_len_diff regime entity resolution
       targets.
@@ -598,26 +644,16 @@ def capped_block_join(
     )
 
     grams = F.expr(
-        f"array_distinct(transform("
-        f"sequence(1, greatest(length(name) - {n - 1}, 1)),"
-        f" i -> substring(name, i, {n})))"
+        "array_distinct(transform("
+        "sequence(1, greatest(length(name) - 2, 1)),"
+        " i -> substring(name, i, 3)))"
     )
-    staged = big.select(
-        "nid", F.explode(grams).alias("_g")
-    ).select(
-        "nid", (md5_hash64(F.col("_g")) % MINHASH_PRIME).alias("_hb")
+    staged = big.select("nid", F.explode(grams).alias("_g")).select(
+        "nid", _base_hash(F.col("_g")).alias("_hb")
     )
-    aggs = []
-    for i in range(k):
-        ai, bi = minhash_coeff(i)
-        aggs.append(
-            F.min((F.lit(ai) * F.col("_hb") + F.lit(bi)) % MINHASH_PRIME).alias(
-                f"m{i}"
-            )
-        )
-    sigs = staged.groupBy("nid").agg(*aggs)
+    sigs = staged.groupBy("nid").agg(*_signature_aggs(F.col("_hb")))
     keys = (
-        minhash_band_keys(sigs, id_col="nid", k=k, bands=bands)
+        minhash_band_keys(sigs, id_col="nid", bands=8)
         .join(big.select("nid", "name", "blk"), "nid")
         .cache()
     )
@@ -1082,9 +1118,6 @@ def minhash_estimate_errors(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n: int = 3,
-    k: int = MINHASH_K,
-    bands: int = MINHASH_BANDS,
 ) -> DataFrame:
     """MinHash calibration check: for every LSH candidate pair, the
     signature-agreement Jaccard ESTIMATE (matching components / k)
@@ -1103,45 +1136,34 @@ def minhash_estimate_errors(
     `array_intersect` Jaccard ride the same two joins. Output is
     |candidates| rows.
     """
-    sh = doc_shingles(df, id_col=id_col, text_col=text_col, n=n)
+    sh = doc_shingles(df, id_col=id_col, text_col=text_col, n=MINHASH_SHINGLE_N)
     staged = sh.select(
-        F.col(id_col),
-        F.col("shingle"),
-        (md5_hash64(F.col("shingle")) % MINHASH_PRIME).alias("_hb"),
+        F.col(id_col), F.col("shingle"), _base_hash(F.col("shingle")).alias("_hb")
     )
-    aggs = []
-    for i in range(k):
-        ca, cb = minhash_coeff(i)
-        aggs.append(
-            F.min((F.lit(ca) * F.col("_hb") + F.lit(cb)) % MINHASH_PRIME).alias(
-                f"m{i}"
-            )
+    sigs = (
+        staged.groupBy(id_col)
+        .agg(
+            *_signature_aggs(F.col("_hb")),
+            F.sort_array(F.collect_list("shingle")).alias("arr"),
         )
-    aggs.append(F.sort_array(F.collect_list("shingle")).alias("arr"))
-    sigs = staged.groupBy(id_col).agg(*aggs).cache()
-    keys = minhash_band_keys(sigs, id_col, k, bands)
-    a = keys.select(F.col(id_col).alias("id_a"), "band", "band_key")
-    b = keys.select(F.col(id_col).alias("id_b"), "band", "band_key")
-    cand = (
-        a.join(b, ["band", "band_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
+        .cache()
     )
+    cand = band_self_join(minhash_band_keys(sigs, id_col), id_col).distinct()
     sa = sigs.select(
         F.col(id_col).alias("id_a"),
         F.col("arr").alias("arr_a"),
-        *[F.col(f"m{i}").alias(f"a{i}") for i in range(k)],
+        *[F.col(f"m{i}").alias(f"a{i}") for i in range(MINHASH_K)],
     )
     sb = sigs.select(
         F.col(id_col).alias("id_b"),
         F.col("arr").alias("arr_b"),
-        *[F.col(f"m{i}").alias(f"b{i}") for i in range(k)],
+        *[F.col(f"m{i}").alias(f"b{i}") for i in range(MINHASH_K)],
     )
     matches = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0) for i in range(k)
+        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
+        for i in range(MINHASH_K)
     )
-    est = matches / F.lit(k)
+    est = matches / F.lit(MINHASH_K)
     c = F.size(F.array_intersect("arr_a", "arr_b"))
     exact = c / (F.size("arr_a") + F.size("arr_b") - c)
     return (

@@ -85,6 +85,7 @@ from .bloom import (
 from .dedup import (
     MINHASH_BANDS,
     MINHASH_K,
+    band_self_join,
     minhash_band_keys,
     minhash_signatures,
 )
@@ -210,9 +211,6 @@ def band_keys_for(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n: int = 3,
-    k: int = MINHASH_K,
-    bands: int = MINHASH_BANDS,
     n_shards: int | None = None,
 ) -> DataFrame:
     """(id, band, band_key, _shard) — the store's row format: the batch
@@ -221,9 +219,7 @@ def band_keys_for(
     existing store pass that store's recorded modulus instead."""
     if n_shards is None:
         n_shards = SIGSTORE_SHARDS
-    rows = minhash_band_keys(
-        minhash_signatures(docs, id_col, text_col, n, k), id_col, k, bands
-    )
+    rows = minhash_band_keys(minhash_signatures(docs, id_col, text_col), id_col)
     return rows.withColumn("_shard", _shard_expr(n_shards))
 
 
@@ -590,14 +586,7 @@ def incremental_lsh_pairs(
     )
     cross = probe_store_pairs(spark, delta, table_dir, id_col, use_bloom)
     if include_within:
-        a = delta.select(F.col(id_col).alias("id_a"), "band", "band_key")
-        b = delta.select(F.col(id_col).alias("id_b"), "band", "band_key")
-        within = (
-            a.join(b, ["band", "band_key"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-        )
-        pairs = cross.unionByName(within).distinct()
+        pairs = cross.unionByName(band_self_join(delta, id_col)).distinct()
     else:
         pairs = cross.distinct()
     if commit:

@@ -1,9 +1,9 @@
 """Catalog views over the enhanced zone — the reference's 4 DuckDB views
 (create_enhanced_views.py:60-95) as Spark SQL temp views.
 
-- wrm_stations_all:    full scan, canonical ordering hoisted to query
-                       level (Spark, like DuckDB, doesn't guarantee
-                       view-level ORDER BY survives — SURVEY §7.4.5)
+- wrm_stations_all:    full scan, unordered (Spark, like DuckDB, doesn't
+                       guarantee view-level ORDER BY survives — SURVEY
+                       §7.4.5; order at query level)
 - wrm_stations_only:   record_type = 'station'
 - wrm_bikes_only:      record_type = 'bike'
 - wrm_stations_latest: ROW_NUMBER latest-per-station (W1)
@@ -46,10 +46,3 @@ def create_views(spark: SparkSession, enhanced: DataFrame) -> None:
         "wrm_bikes_only"
     )
     latest_per_station(enhanced).createOrReplaceTempView("wrm_stations_latest")
-
-
-def ordered_all(spark: SparkSession) -> DataFrame:
-    """The reference's main-view ordering (O1), applied at query level."""
-    return spark.table("wrm_stations_all").orderBy(
-        F.desc("date"), F.desc("file_timestamp"), F.asc("station_id")
-    )

@@ -13,7 +13,7 @@ from ..operators import dedup as D
 from ..operators import similarity as S
 from ..tables import load
 from . import query
-from .textops import _SHINGLES, _sql_hash
+from .textops import _minhash_ctes
 from .vectors import _DIM, _sql_bucket, _sql_cos
 
 _NQ = 20  # eval query set: the 20 smallest vec_ids
@@ -71,37 +71,12 @@ def ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_est_oracle() -> str:
-    k, bands, p = D.MINHASH_K, D.MINHASH_BANDS, D.MINHASH_PRIME
-    rows = k // bands
-    mins = ",\n             ".join(
-        "min(({a} * hb + {b}) % {p}) AS m{i}".format(
-            a=D.minhash_coeff(i)[0], b=D.minhash_coeff(i)[1], p=p, i=i
-        )
-        for i in range(k)
-    )
-    band_selects = []
-    for b in range(bands):
-        key = f"m{b * rows}"
-        for r in range(1, rows):
-            key = f"({key} * 31 + m{b * rows + r})"
-        band_selects.append(
-            f"SELECT doc_id, {b} AS band, {key} AS band_key FROM sig"
-        )
-    bands_sql = "\n      UNION ALL\n      ".join(band_selects)
     matches = " + ".join(
-        f"(CASE WHEN sa.m{i} = sb.m{i} THEN 1 ELSE 0 END)" for i in range(k)
+        f"(CASE WHEN sa.m{i} = sb.m{i} THEN 1 ELSE 0 END)"
+        for i in range(D.MINHASH_K)
     )
     return f"""
-    WITH sh AS ({_SHINGLES}),
-    sig AS (
-      SELECT doc_id,
-             {mins}
-      FROM (SELECT doc_id, {_sql_hash("shingle")} % {p} AS hb FROM sh)
-      GROUP BY doc_id
-    ),
-    bands AS (
-      {bands_sql}
-    ),
+    WITH {_minhash_ctes()},
     cand AS (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
       FROM bands a
@@ -110,7 +85,7 @@ def _minhash_est_oracle() -> str:
     ),
     est AS (
       SELECT c.id_a, c.id_b,
-             CAST({matches} AS DOUBLE) / {k} AS est
+             CAST({matches} AS DOUBLE) / {D.MINHASH_K} AS est
       FROM cand c
       JOIN sig sa ON sa.doc_id = c.id_a
       JOIN sig sb ON sb.doc_id = c.id_b

@@ -13,6 +13,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.dedup import minhash_band_rows
 from ..streaming import await_or_raise
 from . import query
 
@@ -577,86 +578,15 @@ def streamed_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # STATELESS on a stream — only the tiny band-bucket aggregation carries
 # state. This is how a live ingestion feed flags "this doc near-matches
 # something already seen" without ever joining history row-by-row.
-
-
-def _minhash_band_arr():
-    """Per-row array<struct<band,band_key>> from the text column, every
-    intermediate bound as a lambda variable (tokens once, shingle
-    hashes once) so projection collapse can't duplicate the tokenizer
-    or the md5 pass into the k affine mins."""
-    from ..operators import dedup as D
-    from ..operators.text import tokens
-
-    k, bands, p = D.MINHASH_K, D.MINHASH_BANDS, D.MINHASH_PRIME
-    rows = k // bands
-
-    def _affine(a, b):
-        # factory closure: default-arg binding would change the lambda's
-        # ARITY, which pyspark inspects to build the HOF call
-        return lambda h: (F.lit(a) * h + F.lit(b)) % p
-
-    def band_structs(hb):
-        ms = []
-        for i in range(k):
-            a, b = D.minhash_coeff(i)
-            ms.append(F.array_min(F.transform(hb, _affine(a, b))))
-        structs = []
-        for bi in range(bands):
-            key = ms[bi * rows]
-            for r in range(1, rows):
-                key = key * F.lit(31) + ms[bi * rows + r]
-            structs.append(
-                F.struct(F.lit(bi).alias("band"), key.alias("band_key"))
-            )
-        return F.array(*structs)
-
-    hbs = lambda t: F.transform(  # noqa: E731
-        D.shingles_from_tokens(t, 3),
-        lambda s: D.md5_hash64(s) % p,
-    )
-    return F.element_at(
-        F.transform(
-            F.array(tokens(F.col("text"))),
-            lambda t: F.element_at(
-                F.transform(F.array(hbs(t)), band_structs), 1
-            ),
-        ),
-        1,
-    )
+# The per-row form is dedup.minhash_band_rows, the same lanes and band
+# combine as the batch signature path.
 
 
 def _streamed_lsh_oracle() -> str:
-    from ..operators import dedup as D
-    from .textops import _SHINGLES, _sql_hash
+    from .textops import _minhash_ctes
 
-    k, bands, p = D.MINHASH_K, D.MINHASH_BANDS, D.MINHASH_PRIME
-    rows = k // bands
-    mins = ",\n             ".join(
-        "min(({a} * hb + {b}) % {p}) AS m{i}".format(
-            a=D.minhash_coeff(i)[0], b=D.minhash_coeff(i)[1], p=p, i=i
-        )
-        for i in range(k)
-    )
-    band_selects = []
-    for b in range(bands):
-        key = f"m{b * rows}"
-        for r in range(1, rows):
-            key = f"({key} * 31 + m{b * rows + r})"
-        band_selects.append(
-            f"SELECT doc_id, {b} AS band, {key} AS band_key FROM sig"
-        )
-    bands_sql = "\n      UNION ALL\n      ".join(band_selects)
     return f"""
-    WITH sh AS ({_SHINGLES}),
-    sig AS (
-      SELECT doc_id,
-             {mins}
-      FROM (SELECT doc_id, {_sql_hash("shingle")} % {p} AS hb FROM sh)
-      GROUP BY doc_id
-    ),
-    bands AS (
-      {bands_sql}
-    )
+    WITH {_minhash_ctes()}
     SELECT band, band_key,
            count(*) AS n_docs,
            string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id)
@@ -682,9 +612,7 @@ def streamed_lsh_near_dup_buckets(spark: SparkSession, sf_dir: str) -> DataFrame
         .parquet(sf_dir)
     )
     bucketed = (
-        stream.select(F.col("doc_id"), F.explode(_minhash_band_arr()).alias("bk"))
-        .select("doc_id", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"))
-        .filter(F.col("band_key").isNotNull())
+        minhash_band_rows(stream)
         .groupBy("band", "band_key")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -757,20 +685,11 @@ def streamed_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(delta_flag)
     )
     probes = (
-        stream.select(
-            F.col("doc_id").alias("_did"),
-            F.explode(_minhash_band_arr()).alias("bk"),
-        )
-        .select(
-            "_did",
-            F.col("bk.band").alias("band"),
-            F.col("bk.band_key").alias("band_key"),
-        )
-        .filter(F.col("band_key").isNotNull())
+        minhash_band_rows(stream)
         .join(store, ["band", "band_key"])
         .groupBy(
-            F.least("_did", "_sid").alias("id_a"),
-            F.greatest("_did", "_sid").alias("id_b"),
+            F.least("doc_id", "_sid").alias("id_a"),
+            F.greatest("doc_id", "_sid").alias("id_b"),
         )
         .agg(F.count(F.lit(1)).alias("_n_band_hits"))
     )

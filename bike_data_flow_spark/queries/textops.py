@@ -189,9 +189,10 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _minhash_ctes() -> str:
     """The sh → sig → bands CTE chain (exact mirror of
     dedup.minhash_signatures/minhash_band_keys: one md5 base hash mod
-    p, k affine mins, base-31 Horner band keys), exposed separately so
-    composed oracles (curation_inc) can reuse the banding without the
-    pair select _minhash_oracle wraps around it."""
+    p, k affine mins, base-31 Horner band keys) — the family's single
+    SQL mirror. Exposed separately so composed oracles (curation_inc,
+    evalops, streaming_q) reuse the banding without the pair select
+    _minhash_oracle wraps around it."""
     k, bands, p = D.MINHASH_K, D.MINHASH_BANDS, D.MINHASH_PRIME
     rows = k // bands
     mins = ",\n             ".join(

@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators import snapshots as S
+from ..operators.dedup import band_self_join
 from ..operators.sigstore import admit_delta, band_keys_for, probe_store_pairs
 from ..operators.vecstore import (
     admit_vector_delta,
@@ -371,14 +372,7 @@ def curation_batch(
         vec_fut = pool.submit(_vec_chain)
         sig_delta, t_cross = sig_fut.result()
         vec_delta, v_cross = vec_fut.result()
-    a = sig_delta.select(F.col(id_col).alias("id_a"), "band", "band_key")
-    b = sig_delta.select(F.col(id_col).alias("id_b"), "band", "band_key")
-    t_within = (
-        a.join(b, ["band", "band_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    t_within = band_self_join(sig_delta, id_col).distinct()
     va = vec_delta.select(
         F.col("vec_id").alias("id_a"), "bucket", F.col(vec_col).alias("_ea")
     )

@@ -49,6 +49,32 @@ def test_minhash_lsh_candidates(docs):
     assert (1, 4) not in cands and (1, 5) not in cands
 
 
+def test_minhash_per_row_band_rows_match_the_aggregate_form(spark):
+    from bike_data_flow_spark.operators.sigstore import band_keys_for
+
+    rows = [
+        (1, ""),
+        (2, "one"),
+        (3, "two tokens"),
+        (4, "same same same same same"),
+        (5, "the quick brown fox jumps over the lazy dog"),
+        (6, "the quick brown fox jumps over the lazy dog"),  # exact dup of 5
+        (7, "the quick brown fox leaps over the lazy cat"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    per_row = {tuple(r) for r in D.minhash_band_rows(docs).collect()}
+    batch = {
+        (r.doc_id, r.band, r.band_key)
+        for r in band_keys_for(docs).select("doc_id", "band", "band_key").collect()
+    }
+    assert per_row == batch
+    # docs under 3 tokens have no shingle: no band rows in either form
+    assert {r[0] for r in per_row} == {4, 5, 6, 7}
+    assert len(per_row) == 4 * D.MINHASH_BANDS
+    bands_of = lambda i: {(b, k) for d, b, k in per_row if d == i}  # noqa: E731
+    assert bands_of(5) == bands_of(6)
+
+
 def test_simhash_near_pairs(docs):
     sig = D.simhash(docs)
     vals = {r["doc_id"]: r["simhash"] for r in sig.collect()}

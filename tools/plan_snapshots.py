@@ -82,7 +82,14 @@ def current_plan(spark, q, sf_dir: str = SF_DIR) -> str:
     # embedded AQE final plans — whose exchange-reuse shape depends on
     # whatever the session cached before. Clearing first makes the
     # materialization history identical in the generator and the test.
+    # The table memo goes too: tables.load sizes shuffles once per
+    # (app, sf_dir), so a session that loaded sf_dir earlier and was
+    # re-sized since (another sf_dir, an in-process job's get_spark)
+    # would otherwise plan this capture under whatever sizing came last.
+    from bike_data_flow_spark.tables import clear_cache
+
     spark.catalog.clearCache()
+    clear_cache()
     df = q.fn(spark, sf_dir)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
